@@ -54,6 +54,21 @@ def _positions(texts, cfg: SketchConfig):
     return flat_doc, chunk, offset
 
 
+def _doc_bit_runs(texts, cfg: SketchConfig):
+    """Fused shingle+hash for one Arrow batch, as one bit run per doc.
+
+    Returns ``(docs, flat, starts, ends)``: ``docs`` are the batch row
+    indices with at least one window, and doc ``docs[i]``'s bit
+    positions are ``flat[starts[i]:ends[i]]``.  The kernel emits windows
+    grouped by doc, so run bounds come from per-doc counts, not a sort.
+    """
+    doc_idx, pos = shingle_positions(texts, cfg.k, cfg.seeds, cfg.m_padded, cfg.normalize)
+    counts = np.bincount(doc_idx, minlength=len(texts)) * len(cfg.seeds)
+    docs = np.nonzero(counts)[0]
+    ends = np.cumsum(counts[docs])
+    return docs, pos.reshape(-1), ends - counts[docs], ends
+
+
 def _runs(primary: np.ndarray, secondary: np.ndarray):
     """Sort by (primary, secondary) and yield run boundaries."""
     order = np.lexsort((secondary, primary))
@@ -80,49 +95,23 @@ def build_matrix(
     chunk_bytes = cfg.chunk_bytes
 
     single_chunk = cfg.n_chunks == 1
-    h = len(cfg.seeds)
 
     def fn(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             texts = pdf[text_col].tolist()
             if single_chunk:
-                # fast path: no chunk dimension => windows are already
-                # grouped by doc, run bounds come from per-doc counts —
-                # no lexsort at all
-                doc_idx, pos = shingle_positions(
-                    texts, cfg.k, cfg.seeds, cfg.m_padded, cfg.normalize
-                )
-                counts = np.bincount(doc_idx, minlength=len(texts)) * h
-                nzdocs = np.nonzero(counts)[0]
-                run_ends = np.cumsum(counts[nzdocs])
-                run_starts = run_ends - counts[nzdocs]
-                off_sorted = pos.reshape(-1)
+                # fast path: no chunk dimension => no lexsort at all
+                nzdocs, off_sorted, run_starts, run_ends = _doc_bit_runs(texts, cfg)
                 out_id = ids[nzdocs].astype(np.int64)
                 out_chunk = np.zeros(len(nzdocs), dtype=np.int32)
             else:
                 flat_doc, chunk, offset = _positions(texts, cfg)
                 p, s, order, run_starts, run_ends = _runs(flat_doc, chunk)
-                if len(run_starts) == 0:
-                    run_starts = np.empty(0, np.int64)
-                    run_ends = run_starts
-                    out_id = np.empty(0, np.int64)
-                    out_chunk = np.empty(0, np.int32)
-                    off_sorted = np.empty(0, np.uint64)
-                else:
-                    off_sorted = offset[order]
-                    out_id = ids[p[run_starts]].astype(np.int64)
-                    out_chunk = s[run_starts].astype(np.int32)
+                off_sorted = offset[order]
+                out_id = ids[p[run_starts]].astype(np.int64)
+                out_chunk = s[run_starts].astype(np.int32)
             n_runs = len(run_starts)
-            if n_runs == 0:
-                yield pd.DataFrame(
-                    {
-                        "sample_idx": np.empty(0, np.int64),
-                        "chunk_id": np.empty(0, np.int32),
-                        "bf": [],
-                    }
-                )
-                continue
             # per-run scatter into small cache-resident buffers (6x
             # faster than one flat scatter across a giant arena)
             arena = np.zeros((n_runs, chunk_bytes), dtype=np.uint8)
@@ -161,7 +150,6 @@ def build_matrix_grouped(
     cfg: SketchConfig,
     group_col: str,
     text_col: str = "text",
-    tree_fanin: int | None = None,
 ) -> DataFrame:
     """One Bloom filter per group of rows (explicit partial+final agg).
 
@@ -204,57 +192,8 @@ def build_matrix_grouped(
         )
 
     partials = df.select(group_col, text_col).mapInPandas(partial, GROUPED_SCHEMA)
-    if tree_fanin is not None:
-        return or_merge_tree(partials, cfg, fanin=tree_fanin)
     return partials.groupBy("group_key", "chunk_id").applyInPandas(
         merge, GROUPED_SCHEMA
-    )
-
-
-def or_merge_tree(
-    partials: DataFrame,
-    cfg: SketchConfig,
-    fanin: int = 64,
-    key_cols: tuple[str, str] = ("group_key", "chunk_id"),
-) -> DataFrame:
-    """Bitwise-OR TREE reduction of partial bitmaps (explicit two-level
-    merge).  The map stage already bounds partials to one per
-    (task, group, chunk); for very wide builds (10k+ tasks feeding one
-    hot group — the Zipf-host skew case) a single final merge would
-    gather every partial into one task.  The salt level caps any merge
-    task's fan-in at ``fanin`` rows; OR's associativity makes the tree
-    shape irrelevant to the result (property-tested).
-    """
-    chunk_bytes = cfg.chunk_bytes
-    k0, k1 = key_cols
-    salted_schema = f"{k0} string, {k1} int, __salt int, bf binary"
-
-    def merge_salted(key, pdf):
-        return pd.DataFrame(
-            {
-                k0: [key[0]],
-                k1: pd.array([key[1]], dtype="int32"),
-                "__salt": pd.array([key[2]], dtype="int32"),
-                "bf": [or_reduce(list(pdf["bf"]), chunk_bytes)],
-            }
-        )
-
-    def merge_final(key, pdf):
-        return pd.DataFrame(
-            {
-                k0: [key[0]],
-                k1: pd.array([key[1]], dtype="int32"),
-                "bf": [or_reduce(list(pdf["bf"]), chunk_bytes)],
-            }
-        )
-
-    level1 = (
-        partials.withColumn("__salt", F.spark_partition_id() % F.lit(fanin))
-        .groupBy(k0, k1, "__salt")
-        .applyInPandas(merge_salted, salted_schema)
-    )
-    return level1.groupBy(k0, k1).applyInPandas(
-        merge_final, f"{k0} string, {k1} int, bf binary"
     )
 
 

@@ -8,7 +8,7 @@ explicit shuffle keyed by (chunk_id, sample_bucket):
 
     bf_matrix(sample_idx, chunk_id, bf)
       -> groupBy(chunk_id, sample_bucket)        # the ONE shuffle
-      -> applyInPandas(transpose_pack)           # numpy unpack/T/pack
+      -> applyInPandas(transpose)                # SWAR packed-bit transpose
       -> index(slice_id, sample_bucket, slice_bucket, bits)
 
 * ``sample_bucket`` bounds the width of one index cell (bits of
@@ -24,6 +24,7 @@ explicit shuffle keyed by (chunk_id, sample_bucket):
 from __future__ import annotations
 
 import json
+import math
 import os
 
 import numpy as np
@@ -31,7 +32,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from metaprofi_spark.config import SketchConfig
+from metaprofi_spark.kernels import set_bits
 from metaprofi_spark.kernels.bits import bit_matrix_transpose
+from metaprofi_spark.operators.bloom_build import _doc_bit_runs
 
 INDEX_SCHEMA = "range_id long, sample_bucket int, bits binary"
 
@@ -57,11 +60,59 @@ def plan_index_geometry(
     return 1 << (int(n).bit_length() - 1)
 
 
+# slices per SWAR-transpose call: bounds one call's output to
+# _SLICE_BLOCK x bucket/8 bytes (rounded to whole slabs and bytes)
+_SLICE_BLOCK = 1 << 13
+
+
+def _slab_frame(chunks, sbucket: int, cfg: SketchConfig, width_bytes: int) -> pd.DataFrame:
+    """Slabs of one sample bucket, the last step of both index builds.
+
+    ``chunks`` yields ``(chunk_id, mat)``: a dense packed matrix whose
+    row i is local sample i's filter chunk (at most ``chunk_bytes``
+    wide).  Each block of slices is SWAR-transposed, split into slabs
+    of ``slice_range_size`` slices, and only non-zero slabs are kept.
+    """
+    rsize = cfg.slice_range_size
+    unit = math.lcm(rsize, 8)  # block edges on slab AND byte boundaries
+    block = max(_SLICE_BLOCK // unit, 1) * unit
+    out_rid: list[int] = []
+    out_bits: list[bytes] = []
+    for chunk_id, mat in chunks:
+        base_range = chunk_id * cfg.chunk_bits // rsize
+        # a narrower last chunk ends at the filter's edge, rounded up to
+        # a whole slab (the bits past m are zero)
+        nbits = min(cfg.chunk_bits, -(-mat.shape[1] * 8 // rsize) * rsize)
+        for blk in range(0, nbits, block):
+            bend = min(blk + block, nbits)
+            sub = mat[:, blk // 8 : (bend + 7) // 8]
+            packed = bit_matrix_transpose(sub, out_width_bytes=width_bytes)[: bend - blk]
+            if len(packed) < bend - blk:  # the filter ends mid-slab
+                packed = np.pad(packed, ((0, bend - blk - len(packed)), (0, 0)))
+            slabs = packed.reshape(-1, rsize * width_bytes)
+            nz = np.nonzero(slabs.any(axis=1))[0]
+            out_rid.extend((base_range + blk // rsize + nz).tolist())
+            out_bits.extend(slabs[r].tobytes() for r in nz)
+    return pd.DataFrame(
+        {
+            "range_id": pd.array(out_rid, dtype="int64"),
+            "sample_bucket": pd.array([sbucket] * len(out_rid), dtype="int32"),
+            "bits": out_bits,
+        }
+    )
+
+
+def _with_slice_bucket(idx: DataFrame, cfg: SketchConfig) -> DataFrame:
+    return idx.withColumn(
+        "slice_bucket",
+        (F.col("range_id") * F.lit(cfg.slice_range_size) / F.lit(slice_bucket_size(cfg))).cast("int"),
+    )
+
+
 def build_index(
     bf_df: DataFrame,
     cfg: SketchConfig,
     sample_bucket_size: int | None = None,
-    slice_block: int = 1 << 13,
 ) -> DataFrame:
     """Transpose the filter matrix into slice-range slabs.
 
@@ -73,58 +124,20 @@ def build_index(
     """
     bucket = plan_index_geometry(cfg, sample_bucket_size=sample_bucket_size)
     width_bytes = (bucket + 7) // 8
-    chunk_bits = cfg.chunk_bits
     chunk_bytes = cfg.chunk_bytes
-    rsize = cfg.slice_range_size
-    sb_size = slice_bucket_size(cfg)
-    # block must hold whole slabs
-    slice_block = max(slice_block // rsize, 1) * rsize
 
     def transpose(key, pdf):
         chunk_id, sbucket = int(key[0]), int(key[1])
-        n = len(pdf)
         local = (pdf["sample_idx"].to_numpy() - sbucket * bucket).astype(np.int64)
-        mats = np.zeros((n, chunk_bytes), dtype=np.uint8)
-        for i, b in enumerate(pdf["bf"]):
+        # scatter rows by local id into a dense matrix; absent ids stay
+        # zero.  Several rows per sample_idx (duplicate doc ids, or a doc
+        # split across rows) must OR together — a last-writer-wins
+        # scatter would drop bits and break zero false negatives
+        mat = np.zeros((int(local.max()) + 1, chunk_bytes), dtype=np.uint8)
+        for i, b in zip(local, pdf["bf"]):
             a = np.frombuffer(b, dtype=np.uint8)
-            mats[i, : len(a)] = a
-        # multiple rows per sample_idx (duplicate doc ids, or a doc split
-        # across rows) must OR together — a last-writer-wins scatter
-        # would drop bits and break the zero-false-negative guarantee
-        uniq, inv = np.unique(local, return_inverse=True)
-        if len(uniq) != n:
-            merged = np.zeros((len(uniq), chunk_bytes), dtype=np.uint8)
-            np.bitwise_or.at(merged, inv, mats)
-            mats, local, n = merged, uniq, len(uniq)
-        contiguous = bool((local == np.arange(n)).all())
-        base_range = chunk_id * chunk_bits // rsize
-        out_rid: list[int] = []
-        out_bits: list[bytes] = []
-        for blk in range(0, chunk_bits, slice_block):
-            bend = min(blk + slice_block, chunk_bits)
-            nbits = bend - blk
-            sub = mats[:, blk // 8 : (bend + 7) // 8]
-            if contiguous:
-                # dense bucket: SWAR packed-bit transpose, never unpacks
-                packed = bit_matrix_transpose(sub, out_width_bytes=width_bytes)[:nbits]
-            else:
-                bits = np.unpackbits(sub, axis=1, bitorder="little")[:, :nbits]
-                colmat = np.zeros((nbits, bucket), dtype=np.uint8)
-                colmat[:, local] = bits.T
-                packed = np.packbits(colmat, axis=1, bitorder="little")
-            slabs = packed.reshape(nbits // rsize, rsize * width_bytes)
-            nz = np.nonzero(slabs.any(axis=1))[0]
-            if len(nz) == 0:
-                continue
-            out_rid.extend((base_range + blk // rsize + nz).tolist())
-            out_bits.extend(slabs[r].tobytes() for r in nz)
-        return pd.DataFrame(
-            {
-                "range_id": pd.array(out_rid, dtype="int64"),
-                "sample_bucket": pd.array([sbucket] * len(out_rid), dtype="int32"),
-                "bits": out_bits,
-            }
-        )
+            mat[i, : len(a)] |= a
+        return _slab_frame([(chunk_id, mat)], sbucket, cfg, width_bytes)
 
     assert width_bytes > 0
     with_bucket = bf_df.withColumn(
@@ -133,10 +146,7 @@ def build_index(
     idx = with_bucket.groupBy("chunk_id", "sample_bucket").applyInPandas(
         transpose, INDEX_SCHEMA
     )
-    return idx.withColumn(
-        "slice_bucket",
-        (F.col("range_id") * F.lit(rsize) / F.lit(sb_size)).cast("int"),
-    )
+    return _with_slice_bucket(idx, cfg)
 
 
 def build_index_fused(
@@ -145,131 +155,44 @@ def build_index_fused(
     sample_bucket_size: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    slice_block: int = 1 << 13,
     shuffle_partitions: int | None = None,
-    prehash: bool = False,
 ) -> DataFrame:
-    """One-shuffle, zero-intermediate build: docs -> slabs directly.
+    """One-shuffle build straight from docs: same slabs as
+    ``build_matrix |> build_index`` (tested).
 
-    The two-stage path shuffles the PACKED matrix (m/8 bytes per doc);
-    this one shuffles the raw TEXT keyed by sample_bucket (typically
-    3-10x smaller) and runs shingle+hash+set-bits+SWAR-transpose inside
-    a single task per bucket — no per-doc filter rows ever materialize.
-    Equivalent output to build_matrix|>build_index (tested); use the
-    two-stage path when the matrix store itself is wanted (S6), or when
-    n_samples / sample_bucket_size < cores — the fused build's
-    parallelism is bounded by the BUCKET count (a 5k-doc corpus with
-    4k-wide buckets is 2 tasks), while the two-stage matrix map
-    parallelizes across all input splits.
-
-    ``prehash=True`` (experimental, off by default) moves the
-    shingle+hash stage BEFORE the shuffle: map tasks emit each doc's
-    bit positions as one packed binary blob (u32/u64 per position) and
-    the bucket shuffle carries positions instead of text.  Trades
-    shuffle volume (h*4 bytes per k-gram vs ~1 byte of text) for
-    map-side hash parallelism and a text-free reduce — measured on this
-    box it LOSES (see BASELINE.md round-3 note: the extra Python
-    round-trip dominates), kept as the knob the scaling-tail experiment
-    asked for.
+    Two paths exist because each wins somewhere.  This one shuffles
+    raw text keyed by sample_bucket (smaller than the m/8-byte packed
+    matrix) and never materializes per-doc filter rows, so it is the
+    faster build.  The two-stage path is the only one that can index a
+    persisted matrix store, a grouped (``build_matrix_grouped``) build
+    or an ``update_store`` batch, and it parallelizes across input
+    splits where this one is bounded by the bucket count.
     """
     bucket = plan_index_geometry(cfg, sample_bucket_size=sample_bucket_size)
     width_bytes = (bucket + 7) // 8
-    chunk_bits = cfg.chunk_bits
     chunk_bytes = cfg.chunk_bytes
-    rsize = cfg.slice_range_size
-    sb_size = slice_bucket_size(cfg)
-    slice_block = max(slice_block // rsize, 1) * rsize
-    from metaprofi_spark.kernels import set_bits, shingle_positions
-
-    pos_dtype = np.uint32 if cfg.m_padded <= 0xFFFFFFFF else np.uint64
-
-    def emit_slabs(mats):
-        for b, m in mats.items():
-            out_rid: list[int] = []
-            out_bits: list[bytes] = []
-            for chunk_id in range(cfg.n_chunks):
-                base_range = chunk_id * chunk_bits // rsize
-                cstart = chunk_id * chunk_bytes
-                for blk in range(0, chunk_bits, slice_block):
-                    bend = min(blk + slice_block, chunk_bits)
-                    sub = m[:, cstart + blk // 8 : cstart + (bend + 7) // 8]
-                    packed = bit_matrix_transpose(sub, out_width_bytes=width_bytes)[
-                        : bend - blk
-                    ]
-                    slabs = packed.reshape((bend - blk) // rsize, rsize * width_bytes)
-                    nzs = np.nonzero(slabs.any(axis=1))[0]
-                    if len(nzs) == 0:
-                        continue
-                    out_rid.extend((base_range + blk // rsize + nzs).tolist())
-                    out_bits.extend(slabs[r].tobytes() for r in nzs)
-            yield pd.DataFrame(
-                {
-                    "range_id": pd.array(out_rid, dtype="int64"),
-                    "sample_bucket": pd.array([b] * len(out_rid), dtype="int32"),
-                    "bits": out_bits,
-                }
-            )
 
     def fn(batches):
-        # bucket -> (packed filter matrix rows, local ids seen)
+        # bucket -> dense packed filter matrix, row = local sample id
         mats: dict[int, np.ndarray] = {}
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            doc_idx, pos = shingle_positions(
-                pdf[text_col].tolist(), cfg.k, cfg.seeds, cfg.m_padded, cfg.normalize
-            )
-            if len(doc_idx) == 0:
-                continue
-            h = len(cfg.seeds)
-            counts = np.bincount(doc_idx, minlength=len(ids)) * h
-            nz = np.nonzero(counts)[0]
-            run_ends = np.cumsum(counts[nz])
-            run_starts = run_ends - counts[nz]
-            flat = pos.reshape(-1)
-            for r, d in enumerate(nz):
+            rows, flat, starts, ends = _doc_bit_runs(pdf[text_col].tolist(), cfg)
+            for d, s, e in zip(rows, starts, ends):
                 gid = int(ids[d])
                 b = gid // bucket
                 m = mats.get(b)
                 if m is None:
                     m = mats[b] = np.zeros((bucket, cfg.packed_bytes), dtype=np.uint8)
-                local = gid - b * bucket
-                set_bits(m[local], flat[run_starts[r] : run_ends[r]])
-        yield from emit_slabs(mats)
-
-    def map_hash(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            doc_idx, pos = shingle_positions(
-                pdf[text_col].tolist(), cfg.k, cfg.seeds, cfg.m_padded, cfg.normalize
+                set_bits(m[gid - b * bucket], flat[s:e])
+        for b, m in mats.items():
+            yield _slab_frame(
+                (
+                    (c, m[:, c * chunk_bytes : (c + 1) * chunk_bytes])
+                    for c in range(cfg.n_chunks)
+                ),
+                b, cfg, width_bytes,
             )
-            h = len(cfg.seeds)
-            counts = np.bincount(doc_idx, minlength=len(ids)) * h
-            flat = pos.reshape(-1).astype(pos_dtype)
-            ends = np.cumsum(counts)
-            starts = ends - counts
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="int64"),
-                    "pos_blob": [
-                        flat[s:e].tobytes() for s, e in zip(starts, ends)
-                    ],
-                }
-            )
-
-    def fn_prehashed(batches):
-        mats: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            for gid, blob in zip(ids, pdf["pos_blob"]):
-                if not blob:
-                    continue
-                gid = int(gid)
-                b = gid // bucket
-                m = mats.get(b)
-                if m is None:
-                    m = mats[b] = np.zeros((bucket, cfg.packed_bytes), dtype=np.uint8)
-                set_bits(m[gid - b * bucket], np.frombuffer(blob, pos_dtype))
-        yield from emit_slabs(mats)
 
     # Every sample_bucket must land WHOLLY in one task (fn accumulates a
     # full per-bucket matrix), so the shuffle keys on the bucket id.
@@ -278,28 +201,14 @@ def build_index_fused(
     # overhead dominates empties) and far fewer (multi-bucket straggler
     # tasks become the wall-clock).  Default to the session's shuffle
     # parallelism; callers that know their bucket count can pass it.
-    spark = docs.sparkSession
     if shuffle_partitions is None:
         shuffle_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
+            docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
-    if prehash:
-        hashed = docs.select(id_col, text_col).mapInPandas(
-            map_hash, f"{id_col} long, pos_blob binary"
-        )
-        shuffled = hashed.repartition(
-            shuffle_partitions, F.floor(F.col(id_col) / F.lit(bucket))
-        )
-        idx = shuffled.mapInPandas(fn_prehashed, INDEX_SCHEMA)
-    else:
-        shuffled = docs.select(id_col, text_col).repartition(
-            shuffle_partitions, F.floor(F.col(id_col) / F.lit(bucket))
-        )
-        idx = shuffled.mapInPandas(fn, INDEX_SCHEMA)
-    return idx.withColumn(
-        "slice_bucket",
-        (F.col("range_id") * F.lit(rsize) / F.lit(sb_size)).cast("int"),
+    shuffled = docs.select(id_col, text_col).repartition(
+        shuffle_partitions, F.floor(F.col(id_col) / F.lit(bucket))
     )
+    return _with_slice_bucket(shuffled.mapInPandas(fn, INDEX_SCHEMA), cfg)
 
 
 # ---------------------------------------------------------------------------

@@ -476,11 +476,8 @@ _COUNT_SCHEMA = "query_id string, sample_idx long, kgram_hits long, n_kgrams lon
 
 # cogrouped fused plan cap: each bucket group materializes the full
 # replicated hash set in its python worker (~150 B/row as pandas), so
-# past this the memory-bounded streaming joined plan wins.  Env knob
-# for clusters with bigger workers.
-_COGROUP_MAX_HASH_ROWS = int(
-    __import__("os").environ.get("METAPROFI_COGROUP_MAX_HASH_ROWS", "600000")
-)
+# past this the memory-bounded streaming joined plan wins.
+_COGROUP_MAX_HASH_ROWS = 600_000
 
 
 def _fused_bucket_counted(

@@ -18,6 +18,25 @@ from pyspark.sql import SparkSession
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def default_driver_memory(meminfo: str) -> str:
+    """Driver heap for a host, from the text of ``/proc/meminfo``:
+    about half of ``MemTotal``, at least 1g and at most 48g.  A heap
+    larger than physical RAM gets the JVM OOM-killed instead of GC'd."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            gib = int(line.split()[1]) // (2 * 1024 * 1024)  # kB -> GiB / 2
+            return f"{min(max(gib, 1), 48)}g"
+    return "1g"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:
+        return "1g"
+
+
 def get_spark(
     cores: int | str = "*",
     app_name: str = "metaprofi_spark",
@@ -54,7 +73,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory(),
+        )
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         # keep shuffle/block files out of /tmp (aggressively cleaned in

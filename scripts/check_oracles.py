@@ -49,7 +49,7 @@ def main() -> int:
     # console progress bars write \r-terminated lines that concatenate
     # with result lines when the output is piped — keep the log clean
     spark = get_spark(
-        cores=8, app_name="oracle-check", shuffle_partitions=8,
+        app_name="oracle-check", shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

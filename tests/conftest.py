@@ -5,7 +5,7 @@ from metaprofi_spark.plans.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, app_name="metaprofi-tests", shuffle_partitions=8)
+    s = get_spark(app_name="metaprofi-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

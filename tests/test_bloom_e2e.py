@@ -330,16 +330,27 @@ def test_fused_build_equals_two_stage(spark, docs):
     """build_index_fused == build_matrix |> build_index (slab-exact)."""
     from metaprofi_spark.operators import build_index_fused
 
-    fused = build_index_fused(docs, CFG, sample_bucket_size=BUCKET)
-    two = build_index(build_matrix(docs, CFG), CFG, sample_bucket_size=BUCKET)
-    a = {(r.range_id, r.sample_bucket, bytes(r.bits), r.slice_bucket) for r in fused.collect()}
-    b = {(r.range_id, r.sample_bucket, bytes(r.bits), r.slice_bucket) for r in two.collect()}
-    assert a == b and a
-    # the prehash experiment path (positions through the shuffle) is
-    # slab-exact too (BASELINE.md round-3: slower here, kept as a knob)
-    pre = build_index_fused(docs, CFG, sample_bucket_size=BUCKET, prehash=True)
-    c = {(r.range_id, r.sample_bucket, bytes(r.bits), r.slice_bucket) for r in pre.collect()}
-    assert c == a
+    def slabs(d, cfg=CFG):
+        fused = build_index_fused(d, cfg, sample_bucket_size=BUCKET)
+        two = build_index(build_matrix(d, cfg), cfg, sample_bucket_size=BUCKET)
+        a = {(r.range_id, r.sample_bucket, bytes(r.bits), r.slice_bucket) for r in fused.collect()}
+        b = {(r.range_id, r.sample_bucket, bytes(r.bits), r.slice_bucket) for r in two.collect()}
+        assert a == b and a
+        return a
+
+    full = slabs(docs)
+    # gappy ids (every third dropped) plus one id carried by two docs:
+    # the two-stage build scatters them into a dense matrix and ORs the
+    # repeat, the fused build sets both docs' bits in one row
+    gappy = docs.select("doc_id", "text").filter(F.col("doc_id") % 3 != 0)
+    first, other = gappy.orderBy("doc_id").limit(2).collect()
+    dup = spark.createDataFrame([(first.doc_id, other.text)], gappy.schema)
+    assert slabs(gappy.unionByName(dup)) != full
+    # m not a multiple of chunk_bits: the last chunk is narrower than
+    # chunk_bits, and its top slab still comes out
+    cfg = SketchConfig(k=8, h=2, m=3 * 8192 + 800, chunk_bits=8192, slice_buckets=8)
+    tail = slabs(docs.filter(F.col("doc_id") < 120), cfg)
+    assert max(r[0] for r in tail) == (cfg.m - 1) // cfg.slice_range_size
 
 
 def test_hash_queries_vectorized_semantics():

@@ -246,16 +246,6 @@ def test_results_roundtrip():
     assert parsed40["q1"][0] == {"sample": 3, "hits": 4, "pct": 40.0}
 
 
-def test_or_merge_tree_equals_flat_merge(spark, docs):
-    from metaprofi_spark.operators import build_matrix_grouped
-
-    flat = build_matrix_grouped(docs, CFG, group_col="lang")
-    tree = build_matrix_grouped(docs, CFG, group_col="lang", tree_fanin=4)
-    a = {(r.group_key, r.chunk_id): r.bf for r in flat.collect()}
-    b = {(r.group_key, r.chunk_id): r.bf for r in tree.collect()}
-    assert a == b  # OR associativity: tree shape is irrelevant
-
-
 def test_store_summary(spark, docs, tmp_path):
     from metaprofi_spark.operators import build_index, build_matrix, persist_index, store_summary
 
